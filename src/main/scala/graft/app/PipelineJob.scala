@@ -160,14 +160,13 @@ object PipelineJob {
       case Some(p) => p.quarantinePartitions.toSet
       case None => Set.empty[String]
     }
+    val uncommitted = (wk: String) => wk > watermark && !committed.contains(wk)
     val gcCount = timer("partition_gc") {
       Seq("routed", "aggregates").map { t =>
-        catalog.dropPartitions(t, "window_key",
-          wk => wk > watermark && !committed.contains(wk)).size
+        catalog.dropPartitions(t, "window_key", uncommitted).size
       }.sum +
         catalog.dropPartitions("quarantine", "window_key",
-          wk => wk > watermark && !committed.contains(wk) &&
-            !quarCommitted.contains(wk)).size
+          wk => uncommitted(wk) && !quarCommitted.contains(wk)).size
     }
 
     // --- enrich (broadcast dims) ---
@@ -184,26 +183,27 @@ object PipelineJob {
       catalog.overwritePartitions(routed, "routed", Seq("route", "window_key"))
     }
 
-    // One read-back computes route counts AND per-window lineage for THIS
-    // run's windows only (partition-pruned + column-pruned scan — an
-    // incremental run must never rescan the whole history table).
-    // Why not a third Observation on the routed write (round-2 review's
-    // optional item): an Observation can carry per-ROUTE conditional
-    // counts (routes are a fixed enum) but NOT per-WINDOW lineage (windows
-    // are unbounded data values, and CollectMetrics has no grouping) — so
-    // the pruned read-back is needed for lineage either way, route counts
-    // ride the same single scan for free, and a third Observation would
-    // only add another whole-stage-codegen break to the hot path
-    // (measured ~2-3%/node at 40M turns). Strictly worse; not taken.
-    val routeWindowCounts = timer("route_counts") {
-      val routedNow = catalog.read("routed")
-      val afterWm =
-        if (watermark.isEmpty) routedNow
-        else routedNow.filter(col("window_key") > watermark)
-      (if (committed.isEmpty) afterWm
-       else afterWm.filter(!col("window_key").isin(committedSeq: _*)))
-        .groupBy("route", "window_key").count().collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    // ONE scoped read-back feeds route counts, per-window lineage and the
+    // rollup input, so lineage is measured from the written state. After
+    // GC and the write, the routed partitions above the watermark that the
+    // manifest does not list are exactly the ones this run wrote: the
+    // catalog's metadata walk finds them, and the scan's file index lists
+    // only those directories under the written frame's schema (no
+    // inference job). Reading the table root instead would list every
+    // (route, window) directory of the whole history on every commit. A
+    // replay wrote nothing, finds nothing and scans nothing.
+    // Why not a third Observation on the routed write: it could carry
+    // per-ROUTE conditional counts (routes are a fixed enum) but not
+    // per-WINDOW lineage (windows are unbounded data values, and
+    // CollectMetrics has no grouping), and it would add another
+    // whole-stage-codegen break to the hot path (measured ~2-3%/node at
+    // 40M turns).
+    val (written, routeWindowCounts) = timer("route_counts") {
+      val w = catalog.readPartitions("routed", "window_key", routed.schema,
+        uncommitted).map(_.drop("text"))
+      val counts = w.toSeq.flatMap(_.groupBy("route", "window_key").count()
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))))
+      (w, counts)
     }
     val todo = routeWindowCounts.map(_._2).distinct.sorted.toSeq
     val routeCounts = routeWindowCounts.groupBy(_._1)
@@ -229,8 +229,11 @@ object PipelineJob {
     // duplicates (its 409 already-processed analog, ingestion_service.go:79-83).
     val duplicatesDropped = rowsValid - rowsParsed
     if (quarantined > 0) {
+      // Repartitioned on the partition column like the routed write: one
+      // file per window instead of one per (input task, window).
       val q = quarantine.withColumn("window_key",
         coalesce(col("window_key"), lit("invalid")))
+        .repartition(config.shufflePartitions, col("window_key"))
       catalog.overwritePartitions(q, "quarantine", Seq("window_key"))
     }
     // The committed-quarantine set for the manifest = every quarantine
@@ -245,16 +248,13 @@ object PipelineJob {
       catalog.listPartitionValues("quarantine", "window_key")
         .filter(_ > watermark)
 
-    // --- rollup: read back the routed table scoped to this run's windows
-    //     (partition-pruned scan — the isin on the partition column prunes
-    //     directories) and aggregate without the wide text column.
+    // --- rollup over the scoped read-back (this run's windows, without
+    //     the wide text column).
     //     A5 incremental semantics: each window is recomputed wholesale and
     //     dynamic partition overwrite replaces exactly those windows, so
     //     aggregate state for committed windows is never touched and replays
     //     of uncommitted windows converge (idempotent upsert, K2 analog). ---
-    val aggRows = if (todo.isEmpty) 0L else {
-      val forAgg = catalog.read("routed").drop("text")
-        .filter(col("window_key").isin(todo: _*))
+    val aggRows = written.fold(0L) { forAgg =>
       val obsAgg = new Observation(s"agg-$runId")
       val exploded = Rollup.explodedRollup(forAgg, config.windowSize, config.saltBuckets)
         .withColumn("window_key", Rollup.windowKey(col("window_start"), config.windowSize))

@@ -36,24 +36,32 @@ final class TranscriptCatalog(val root: String, spark: SparkSession) {
   def read(table: String): DataFrame = spark.read.parquet(path(table))
 
   /** Recursive listing of `table`'s `partitionCol=...` directories (any
-    * nesting depth) — the ONE walk under both partition GC and partition
-    * listing. Pure FS metadata, no data scan.
+    * nesting depth) — the ONE walk under partition GC, partition listing
+    * and scoped read-back. Pure FS metadata, no data scan. Hidden
+    * directories are skipped by Spark's own rule (a `.` prefix, or a `_`
+    * prefix without `=`): a crashed write leaves its partitions under
+    * `_temporary/...` or `.spark-staging-*`, and those were never
+    * committed — a scan ignores them, so the walk must too.
     */
   private def partitionDirs(
       table: String,
       partitionCol: String
-  ): (org.apache.hadoop.fs.FileSystem, Seq[org.apache.hadoop.fs.Path]) = {
+  ): (org.apache.hadoop.fs.FileSystem, Seq[(org.apache.hadoop.fs.Path, String)]) = {
     import org.apache.hadoop.fs.Path
     val base = new Path(path(table))
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(base)) return (fs, Nil)
     val prefix = partitionCol + "="
+    def hidden(name: String) =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
     def walk(p: Path): Seq[Path] =
-      fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
-        if (st.getPath.getName.startsWith(prefix)) Seq(st.getPath)
-        else walk(st.getPath)
-      }
-    (fs, walk(base))
+      fs.listStatus(p).toSeq
+        .filter(st => st.isDirectory && !hidden(st.getPath.getName))
+        .flatMap { st =>
+          if (st.getPath.getName.startsWith(prefix)) Seq(st.getPath)
+          else walk(st.getPath)
+        }
+    (fs, walk(base).map(p => p -> p.getName.stripPrefix(prefix)))
   }
 
   /** Delete every `partitionCol=value` directory of `table` (at any nesting
@@ -65,11 +73,31 @@ final class TranscriptCatalog(val root: String, spark: SparkSession) {
     * metadata work — no data scan.
     */
   def dropPartitions(table: String, partitionCol: String, drop: String => Boolean): Seq[String] = {
-    val prefix = partitionCol + "="
     val (fs, dirs) = partitionDirs(table, partitionCol)
-    val victims = dirs.filter(p => drop(p.getName.stripPrefix(prefix)))
+    val victims = dirs.collect { case (p, v) if drop(v) => p }
     victims.foreach(p => fs.delete(p, true))
     victims.map(_.toString)
+  }
+
+  /** Scan of only those `partitionCol=value` directories of `table` for
+    * which `keep(value)` holds; None when there are none. The file index
+    * lists just those directories (partition columns still parsed against
+    * the table root), and `schema` — the writer's — replaces the
+    * schema-inference job, so the cost follows the partitions kept, not the
+    * table's history.
+    */
+  def readPartitions(
+      table: String,
+      partitionCol: String,
+      schema: org.apache.spark.sql.types.StructType,
+      keep: String => Boolean
+  ): Option[DataFrame] = {
+    val dirs = partitionDirs(table, partitionCol)._2.collect {
+      case (p, v) if keep(v) => p.toString
+    }
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(schema).option("basePath", path(table))
+      .parquet(dirs: _*))
   }
 
   def exists(table: String): Boolean = {
@@ -114,10 +142,8 @@ final class TranscriptCatalog(val root: String, spark: SparkSession) {
   /** Existing `partitionCol=value` values of `table` — the read side of
     * the shared `partitionDirs` walk.
     */
-  def listPartitionValues(table: String, partitionCol: String): Seq[String] = {
-    val prefix = partitionCol + "="
-    partitionDirs(table, partitionCol)._2.map(_.getName.stripPrefix(prefix))
-  }
+  def listPartitionValues(table: String, partitionCol: String): Seq[String] =
+    partitionDirs(table, partitionCol)._2.map(_._2)
 
   // ------------------------------------------------------------------
   // Bucketed tables. Spark persists bucketing metadata in the SESSION

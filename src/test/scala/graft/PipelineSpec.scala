@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.agg.Rollup
 import graft.app.PipelineJob
 import graft.checkpoint.Checkpoint
 import graft.gen.TranscriptGen
@@ -15,6 +22,40 @@ import graft.sink.TranscriptCatalog
 class PipelineSpec extends SparkSpecBase {
 
   private val N = 20000L
+
+  /** Runs `body` and returns its result with the root path of every file
+    * relation a query read meanwhile (seen by a query listener).
+    */
+  private def scannedRoots[T](body: => T): (T, Seq[String]) = {
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.foreach {
+          case l: LogicalRelation => l.relation match {
+            case h: HadoopFsRelation =>
+              h.location.rootPaths.foreach(p => roots.add(p.toUri.getPath))
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      ListenerBusAccess.drain(spark.sparkContext)
+      (r, roots.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** (route, window) partition directories of `out`'s routed table. */
+  private def routedDirs(out: String): Seq[java.io.File] =
+    new java.io.File(s"$out/routed").listFiles.toSeq
+      .filter(_.getName.startsWith("route="))
+      .flatMap(_.listFiles.toSeq.filter(_.getName.startsWith("window_key=")))
+
+  private def windowOf(dir: java.io.File): String =
+    dir.getName.stripPrefix("window_key=")
 
   test("pipeline e2e: routes partition the input; aggregates tally to input size") {
     val out = tmpDir("pipe-e2e")
@@ -271,5 +312,101 @@ class PipelineSpec extends SparkSpecBase {
       Array("ING_1000")
     catalog.read("aggregates").filter(col("dim") === "tool")
       .agg(sum("cnt")).head.getLong(0) shouldBe res.metrics("rows_parsed")
+  }
+
+  test("scoped read-back: a commit scans only the routed partitions it " +
+    "wrote, a replay scans none; counts match an independent read") {
+    val out = tmpDir("pipe-scoped")
+    val raw = TranscriptGen.generate(spark, 3000, 4) // 3 minute-windows
+    PipelineJob.run(spark, raw, out, PipelineConfig(), "t1")
+    // History replayed (committed windows) alongside 3 new windows.
+    val raw2 = raw.unionByName(
+      raw.withColumn("ts", col("ts") + expr("INTERVAL 60 MINUTES")))
+    val (r2, roots2) = scannedRoots(
+      PipelineJob.run(spark, raw2, out, PipelineConfig(), "t2"))
+    r2.processedWindows.size shouldBe 3
+    val thisRun = routedDirs(out)
+      .filter(d => r2.processedWindows.contains(windowOf(d))).map(_.getPath)
+    roots2.filter(_.startsWith(s"$out/routed")).toSet shouldBe thisRun.toSet
+
+    // Route counts and lineage equal Spark's own read of those windows.
+    val independent = spark.read.parquet(s"$out/routed")
+      .filter(col("window_key").isin(r2.processedWindows: _*))
+    def counts(by: String) = independent.groupBy(by).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    r2.routeCounts shouldBe counts("route")
+    r2.routeCounts.values.sum shouldBe 3000L
+    val perWindow = counts("window_key")
+    new TranscriptCatalog(out, spark).read("lineage")
+      .filter(col("run_id") === "t2").collect()
+      .map(r => r.getAs[String]("window_key") -> r.getAs[Long]("rows"))
+      .toMap shouldBe perWindow
+    Checkpoint.read(s"$out/_checkpoint").get.committedPartitions
+      .filter(p => perWindow.contains(p.partition))
+      .map(p => p.partition -> p.rows).toMap shouldBe perWindow
+
+    val (r3, roots3) = scannedRoots(
+      PipelineJob.run(spark, raw2, out, PipelineConfig(), "t3"))
+    r3.processedWindows shouldBe empty
+    r3.metrics("agg_rows") shouldBe 0L
+    roots3.filter(_.startsWith(s"$out/routed")) shouldBe empty
+  }
+
+  test("crashed-write debris (_temporary, .spark-staging-*) is invisible " +
+    "to partition listing, GC and a commit's route counts") {
+    val out = tmpDir("pipe-debris")
+    val raw = TranscriptGen.generate(spark, 2000, 4)
+    val r1 = PipelineJob.run(spark, raw, out, PipelineConfig(), "t1")
+    val later = raw.withColumn("ts", col("ts") + expr("INTERVAL 60 MINUTES"))
+    val next = later.select(Rollup.windowKey(
+        Rollup.windowStart(col("ts"), "minute"), "minute"))
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
+    // A crashed write's partitions, for a window the next commit writes,
+    // in the committer's task-attempt layout and in dynamic overwrite's
+    // staging layout.
+    val src = routedDirs(out).head.listFiles
+      .filter(_.getName.endsWith(".parquet")).head
+    val debris = Seq(
+      s"$out/routed/_temporary/0/_temporary/attempt_0/route=errors/window_key=${next.head}",
+      s"$out/routed/.spark-staging-0/route=errors/window_key=${next.head}")
+      .map(new java.io.File(_))
+    debris.foreach { d =>
+      d.mkdirs()
+      java.nio.file.Files.copy(src.toPath, new java.io.File(d, src.getName).toPath)
+    }
+    val catalog = new TranscriptCatalog(out, spark)
+    catalog.listPartitionValues("routed", "window_key").toSet shouldBe
+      r1.processedWindows.toSet
+    catalog.dropPartitions("routed", "window_key", next.contains) shouldBe empty
+    debris.foreach(_.exists() shouldBe true)
+
+    val r2 = PipelineJob.run(spark, later, out, PipelineConfig(), "t2")
+    r2.processedWindows shouldBe next
+    r2.routeCounts shouldBe spark.read.parquet(s"$out/routed")
+      .filter(col("window_key").isin(next: _*))
+      .groupBy("route").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    r2.metrics("rows_routed") shouldBe 2000L
+    catalog.read("aggregates").filter(col("dim") === "tool")
+      .agg(sum("cnt")).head.getLong(0) shouldBe 4000L
+  }
+
+  test("routed and quarantine writes leave at most one file per partition") {
+    val out = tmpDir("pipe-files")
+    // 4 input tasks over 3 windows: every window spans two tasks.
+    val raw = TranscriptGen.generate(spark, 3000, 4)
+      .withColumn("text", when(pmod(col("turn_idx"), lit(10)) === 9,
+        lit(null).cast("string")).otherwise(col("text")))
+    val res = PipelineJob.run(spark, raw, out, PipelineConfig(), "t1")
+    res.metrics("rows_quarantined") should be > 0L
+    def files(dir: java.io.File) =
+      dir.listFiles.count(_.getName.endsWith(".parquet"))
+    val routed = routedDirs(out)
+    routed.map(windowOf).toSet shouldBe res.processedWindows.toSet
+    routed.map(files).max shouldBe 1
+    val quarantine = new java.io.File(s"$out/quarantine").listFiles
+      .filter(_.getName.startsWith("window_key="))
+    quarantine.map(windowOf).toSet shouldBe res.processedWindows.toSet
+    quarantine.map(files).max shouldBe 1
   }
 }
